@@ -22,6 +22,11 @@ from ..operators.windows import slope_trend
 from . import query
 
 _TOP_K = 100
+# Heat reads two trailing 10-minute windows (cnt_10m, prev_10m) back from
+# the newest fact, so no fact older than HEAT_HORIZON_US ever counts; the
+# streaming facts log is collected past the same horizon.
+HEAT_WINDOW_US = 600_000_000
+HEAT_HORIZON_US = 2 * HEAT_WINDOW_US
 
 
 def cards_from_state(upsert: DataFrame, facts: DataFrame, top_k: int = _TOP_K) -> DataFrame:
@@ -32,9 +37,10 @@ def cards_from_state(upsert: DataFrame, facts: DataFrame, top_k: int = _TOP_K) -
       with start_ts_us/last_ts_us/evidence_count/last_value (the shape
       ``streaming.keyed_table`` maintains incrementally);
     - ``facts``: survivor timestamps (event_type, ts_us) — the deduped
-      event log the trailing heat windows are computed over (at scale
-      this table is GC'd past the 20-minute heat horizon; heat never
-      reads older facts).
+      event log the trailing heat windows are computed over. It may be
+      collected past ``HEAT_HORIZON_US``: heat never reads older facts,
+      and a type whose facts are all gone still carries its cards with
+      zero heat.
 
     Shared by the batch ``e2e_pipeline_trace`` query and the integrated
     streaming slice (streaming/e2e.py), so stream-vs-batch parity of the
@@ -44,18 +50,20 @@ def cards_from_state(upsert: DataFrame, facts: DataFrame, top_k: int = _TOP_K) -
     s = facts.crossJoin(F.broadcast(now_t))
     heat = s.groupBy("event_type").agg(
         F.sum(
-            F.when(F.col("ts_us") > F.col("now_us") - 600_000_000, 1).otherwise(0)
+            F.when(F.col("ts_us") > F.col("now_us") - HEAT_WINDOW_US, 1).otherwise(0)
         ).alias("cnt_10m"),
         F.sum(
             F.when(
-                (F.col("ts_us") > F.col("now_us") - 1_200_000_000)
-                & (F.col("ts_us") <= F.col("now_us") - 600_000_000),
+                (F.col("ts_us") > F.col("now_us") - HEAT_HORIZON_US)
+                & (F.col("ts_us") <= F.col("now_us") - HEAT_WINDOW_US),
                 1,
             ).otherwise(0)
         ).alias("prev_10m"),
     )
 
-    card = upsert.join(F.broadcast(heat), "event_type")
+    card = upsert.join(F.broadcast(heat), "event_type", "left").fillna(
+        0, ["cnt_10m", "prev_10m"]
+    )
     # Integer centi-point score — exact in both engines; the slope gate
     # slope <= -0.2 is the integer fact cnt_10m - prev_10m <= -2
     # (inclusive, matching the reference's trend thresholds).

@@ -704,6 +704,7 @@ def test_sem_pair_kernel_equals_hof_tier(spark, sf_dir):
     ).coalesce(1).write.mode("overwrite").parquet(f"{tmp}/documents.parquet")
 
     qs = all_queries()
+    old = td._SEM_PAIR_KERNEL
     try:
         for name in (
             "x_semantic_decontaminate",
@@ -711,12 +712,10 @@ def test_sem_pair_kernel_equals_hof_tier(spark, sf_dir):
             "x_semantic_decontaminate_idf",
         ):
             key = "doc_id"
-            old = td._SEM_PAIR_KERNEL
             td._SEM_PAIR_KERNEL = True
             kern = qs[name].fn(spark, tmp)
             td._SEM_PAIR_KERNEL = False
             ref = qs[name].fn(spark, tmp)
-            td._SEM_PAIR_KERNEL = old
             cols = [c for c in kern.columns if c != key]
             j = kern.alias("a").join(ref.alias("b"), key, "full_outer")
             checks = [
@@ -732,4 +731,5 @@ def test_sem_pair_kernel_equals_hof_tier(spark, sf_dir):
             for c in cols:
                 assert bad[c] == 0, f"{name}.{c}: {bad[c]} mismatches"
     finally:
+        td._SEM_PAIR_KERNEL = old
         shutil.rmtree(tmp, ignore_errors=True)

@@ -1486,6 +1486,110 @@ def test_integrated_pipeline_stream_restart_matches_batch_trace(
     assert relab.filter(F.col("level") != F.col("level2")).count() == 0
 
 
+def test_integrated_pipeline_commits_only_data_batches(spark, sf_dir, tmp_path):
+    """A tick commits only the micro-batches that read input (no trailing
+    no-data batch), and a tick over an unchanged landing dir commits
+    nothing: no facts dir, no new upsert snapshot. The session's no-data
+    flag is left as the caller had it, set or unset."""
+    from event_stream_starter_spark.io import load_table
+    from event_stream_starter_spark.streaming.e2e import start_integrated_pipeline
+
+    flag = "spark.sql.streaming.noDataMicroBatches.enabled"
+    land, state, ck = (str(tmp_path / d) for d in ("land", "state", "ck"))
+    load_table(spark, sf_dir, "events").repartitionByRange(2, "ts").write.parquet(land)
+    # Land the two event-time halves in order (pinned mtimes), so the last
+    # data batch advances the watermark and a no-data batch would be due.
+    parts = sorted(n for n in os.listdir(land) if n.endswith(".parquet"))
+    for i, n in enumerate(parts):
+        os.utime(os.path.join(land, n), (1_700_000_000 + i * 10,) * 2)
+
+    def commits():
+        return sorted(int(n) for n in os.listdir(os.path.join(ck, "commits")) if n.isdigit())
+
+    before = spark.conf.get(flag, None)
+    q, upsert, facts = start_integrated_pipeline(spark, land, state, ck)
+    assert spark.conf.get(flag, None) == before
+    q.awaitTermination()
+    assert q.exception() is None
+    data = [p.batchId for p in q.recentProgress if p.numInputRows > 0]
+    assert len(data) == 2 and commits() == data
+
+    def written():
+        return commits(), sorted(os.listdir(facts.path)), sorted(os.listdir(upsert.path))
+
+    seen = written()
+    spark.conf.set(flag, "true")
+    try:
+        q2, upsert, facts = start_integrated_pipeline(spark, land, state, ck)
+        assert spark.conf.get(flag) == "true"
+        q2.awaitTermination()
+    finally:
+        spark.conf.unset(flag)
+    assert q2.exception() is None
+    assert written() == seen
+
+
+def test_facts_gc_keeps_heat_horizon_without_spark_jobs(spark, tmp_path):
+    """SurvivorFactsTable.gc drops exactly the batch dirs whose newest
+    fact is older than (newest fact - HEAT_HORIZON_US), and dirs with no
+    facts, reading each max ts_us from parquet footers: no Spark job
+    runs. The cards read the same before and after, including those of a
+    type whose facts are all collected (zero heat either way)."""
+    import time
+
+    from event_stream_starter_spark.queries.pipeline_e2e import HEAT_HORIZON_US
+    from event_stream_starter_spark.streaming.e2e import (
+        FACTS_SCHEMA,
+        UPSERT_KEYS,
+        SurvivorFactsTable,
+        read_cards,
+    )
+
+    now, h = 1_700_000_000_000_000, HEAT_HORIZON_US
+    planted = {  # batch id -> (event_type, ts_us) facts
+        0: [("stale", now - 3 * h), ("click", now - 2 * h)],
+        1: [("click", now - h - 1)],
+        2: [("view", now - 1), ("click", now)],
+        3: [("view", now - 2 * h), ("click", now - h)],  # max at the boundary
+        4: [],
+    }
+    facts = SurvivorFactsTable(spark, str(tmp_path / "facts"))
+    for bid, rows in planted.items():
+        facts.append_batch(spark.createDataFrame(rows, FACTS_SCHEMA), bid)
+    all_facts = [r for rows in planted.values() for r in rows]
+    events = spark.createDataFrame(
+        [(f"{t}-{i % 2}", t, ts, float(i)) for i, (t, ts) in enumerate(all_facts)],
+        "event_key string, event_type string, ts_us bigint, value double",
+    ).withColumn("ts", F.timestamp_micros("ts_us"))
+    upsert = KeyedParquetTable(spark, str(tmp_path / "upsert"), key_cols=UPSERT_KEYS)
+    upsert.upsert_batch(events, 0)
+    before = sorted(tuple(r) for r in read_cards(upsert, facts).collect())
+
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+    tag = f"facts-gc-{id(facts)}"
+    try:
+        sc.setJobGroup(f"{tag}-gc", "facts gc")
+        facts.gc()
+        # Positive control: a job in a later group. Job events reach the
+        # tracker in order, so once it shows, any gc job would show too.
+        sc.setJobGroup(f"{tag}-probe", "facts read")
+        facts.read().count()
+        deadline = time.monotonic() + 60
+        while not tracker.getJobIdsForGroup(f"{tag}-probe"):
+            assert time.monotonic() < deadline
+            time.sleep(0.05)
+        assert tracker.getJobIdsForGroup(f"{tag}-gc") == []
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+
+    assert sorted(os.listdir(facts.path)) == ["batch=2", "batch=3"]
+    after = sorted(tuple(r) for r in read_cards(upsert, facts).collect())
+    assert after == before
+    assert "stale" in {r[1] for r in after}
+
+
 def test_streaming_datacard_matches_batch_query_and_replay_safe(
     spark, sf_dir, tmp_path
 ):
